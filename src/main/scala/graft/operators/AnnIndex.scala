@@ -266,7 +266,8 @@ object AnnIndex {
     * writer lock, this WAITS (bounded) and then proceeds — a
     * streaming ingest survives maintenance instead of dying on it. */
   def append(s: SparkSession, newVecs: DataFrame, dir: String): Unit = {
-    val centroids = readCentroids(s, dir)
+    val centroids = cachedQuantizers(s, dir, IndexFiles.read(s, dir).built,
+      needPq = false).centroids
     IndexFiles.commitDataAppend(s, dir, "cells") {
       // one file per touched cell per batch (not per scan partition ×
       // cell) — appends are the litter compact exists to fold; don't
@@ -951,8 +952,8 @@ object AnnIndex {
     val root = new Path(s"$dir/cells")
     val fs = IndexFiles.fsFor(s, root)
     val preExisting = IndexFiles.listParquet(fs, root).map(_.rel).toSet
-    val rows = s.read.option("basePath", root.toString)
-      .parquet(IndexFiles.resolve(dir, "cells", rewrite.toSeq.sorted): _*)
+    val rows = IndexFiles.dataFrame(s, dir, "cells",
+      man.copy(data = man.data.filter(e => rewrite(e.rel)))).get
     IndexFiles.dropTombstoned(s, dir, man, rows, "vec_id")
       // one shuffle partition per cell → ~one folded file per cell;
       // at corpus scale maxRecordsPerFile re-splits a giant cell
@@ -1113,8 +1114,8 @@ object AnnIndex {
         .filter(r => cellOf(r).stripPrefix("cell=").toIntOption
           .exists(hotSet)).toSet
       val preExisting = IndexFiles.listParquet(fs, root).map(_.rel).toSet
-      s.read.option("basePath", root.toString)
-        .parquet(IndexFiles.resolve(dir, "cells", rewrite.toSeq.sorted): _*)
+      IndexFiles.dataFrame(s, dir, "cells",
+          man.copy(data = man.data.filter(e => rewrite(e.rel)))).get
         .select(col("vec_id"), col("embedding"),
           guardedCell(newCentroids.head.length, newCentroids).as("cell"))
         .repartition(col("cell"))

@@ -220,15 +220,17 @@ object Bm25Index {
             StructField("stats_corrected", BooleanType, nullable = false))))
       case Some(rows) =>
         val tbs = terms.map(termBucket).distinct
-        val tf = IndexFiles.dropTombstoned(s, dir, m,
-            rows.where(col("tb").isin(tbs: _*) &&
-              col("term").isin(terms: _*)), "doc_id")
+        // one tombstone frame for both the anti join and the N/avgdl
+        // correction below
+        val tombs = IndexFiles.tombstoneIds(s, dir, m, "doc_id")
+        val probed = rows.where(col("tb").isin(tbs: _*) &&
+          col("term").isin(terms: _*))
+        val tf = tombs.fold(probed)(probed.join(_, Seq("doc_id"), "left_anti"))
           .select(col("doc_id"), col("dl"), col("term").as("w"), col("tf"))
         val dfreq = tf.groupBy(col("w"))
           .agg(count(lit(1)).cast(DoubleType).as("df"))
         val tot = rows.where(col("tb") === StatsTb)
           .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sdl"))
-        val tombs = IndexFiles.tombstoneIds(s, dir, m, "doc_id")
         val stats = tombs match {
           case None =>
             tot.select(col("n").cast(DoubleType).as("n_docs"),
@@ -292,8 +294,8 @@ object Bm25Index {
       val root = new Path(s"$dir/postings")
       val fs = IndexFiles.fsFor(s, root)
       val preExisting = IndexFiles.listParquet(fs, root).map(_.rel).toSet
-      val rows = s.read.option("basePath", root.toString)
-        .parquet(IndexFiles.resolve(dir, "postings", rewrite.toSeq.sorted): _*)
+      val rows = IndexFiles.dataFrame(s, dir, "postings",
+        man.copy(data = man.data.filter(e => rewrite(e.rel)))).get
       val deadAgg = IndexFiles.tombstoneIds(s, dir, man, "doc_id") match {
         case None => Seq((0L, BigDecimal(0))).toDF_(s, "dn", "dsdl")
         case Some(t) => rows.where(col("tb") === DoclenTb)

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.GraftInternals
 
 /** Manifest-pointer commit protocol shared by the two persisted-index
   * lifecycles ([[AnnIndex]] `cells/`, [[TextIndex]] `buckets/`).
@@ -357,28 +358,30 @@ private[operators] object IndexFiles {
   def countParquetFiles(fs: FileSystem, dir: Path): Long =
     listParquet(fs, dir).size.toLong
 
-  /** Absolute paths for manifest entries under `<dir>/<sub>`. */
-  def resolve(dir: String, sub: String, rels: Seq[String]): Seq[String] =
-    rels.map(r => s"$dir/$sub/$r")
-
-  /** DataFrame over exactly the manifest's live data files. `basePath`
-    * keeps partition-directory inference (and therefore
-    * PartitionFilters pruning) identical to a whole-directory scan —
-    * the scan opens ONLY live files, so replaced-but-not-yet-vacuumed
-    * litter is invisible. None when the live set is empty. */
+  /** DataFrame over exactly the manifest's live data files. It is
+    * built from the manifest alone — the entries' paths and sizes
+    * stand in for a listing and the first file's footer gives the
+    * schema ([[GraftInternals.parquetFiles]]) — so it neither lists
+    * nor infers: constructing it starts no Spark job. `basePath` keeps
+    * partition-column inference (and therefore PartitionFilters
+    * pruning) identical to a whole-directory scan — the scan opens
+    * ONLY live files, so replaced-but-not-yet-vacuumed litter is
+    * invisible. None when the live set is empty. */
   def dataFrame(s: SparkSession, dir: String, sub: String,
                 m: Manifest): Option[DataFrame] =
-    if (m.data.isEmpty) None
-    else Some(s.read.option("basePath", s"$dir/$sub")
-      .parquet(resolve(dir, sub, m.dataFiles): _*))
+    scan(s, s"$dir/$sub", m.data)
 
   /** The live tombstone-id list (normalized to `idCol`), None when no
-    * delete is outstanding. */
+    * delete is outstanding. Built like [[dataFrame]]: no job. */
   def tombstoneIds(s: SparkSession, dir: String, m: Manifest,
                    idCol: String): Option[DataFrame] =
-    if (m.tombstones.isEmpty) None
-    else Some(s.read.parquet(resolve(dir, "tombstones", m.tombFiles): _*)
-      .select(col(idCol)))
+    scan(s, s"$dir/tombstones", m.tombstones).map(_.select(col(idCol)))
+
+  private def scan(s: SparkSession, root: String,
+                   entries: Vector[Entry]): Option[DataFrame] =
+    if (entries.isEmpty) None
+    else Some(GraftInternals.parquetFiles(s, root,
+      entries.map(e => (s"$root/${e.rel}", e.size))))
 
   /** Drop tombstoned ids from `df` — no-op (and no plan change) when
     * no delete is outstanding. No broadcast hint: the list is a
@@ -525,13 +528,14 @@ private[operators] object IndexFiles {
     val tomb = tombs.head
     val data = dataFrame(s, dir, sub, m).get
       .select(col(idCol), input_file_name().as("_file"))
-    val nIds = tomb.count()
+    // one job: at most MaxPushdownIds + 1 distinct ids come back, and
+    // hitting the limit means the list is too long to push down
+    val ids = tomb.distinct().limit((MaxPushdownIds + 1).toInt).collect()
     val hits =
-      if (nIds == 0L) return Set.empty
-      else if (nIds <= MaxPushdownIds) {
-        val ids = tomb.distinct().collect().map(_.getLong(0))
-        data.where(col(idCol).isin(ids.toIndexedSeq: _*))
-      } else data.join(tomb, Seq(idCol), "left_semi")
+      if (ids.isEmpty) return Set.empty
+      else if (ids.length <= MaxPushdownIds)
+        data.where(col(idCol).isin(ids.map(_.getLong(0)).toIndexedSeq: _*))
+      else data.join(tomb, Seq(idCol), "left_semi")
     val rootUri = {
       val root = new Path(s"$dir/$sub")
       fsFor(s, root).makeQualified(root).toUri.getPath

@@ -160,8 +160,8 @@ object TextIndex {
     val root = new Path(s"$dir/buckets")
     val fs = IndexFiles.fsFor(s, root)
     val preExisting = IndexFiles.listParquet(fs, root).map(_.rel).toSet
-    val rows = s.read
-      .parquet(IndexFiles.resolve(dir, "buckets", rewrite.toSeq.sorted): _*)
+    val rows = IndexFiles.dataFrame(s, dir, "buckets",
+      man.copy(data = man.data.filter(e => rewrite(e.rel)))).get
     val rewriteBytes = man.data.filter(e => rewrite(e.rel)).map(_.size).sum
     val targetFiles = math.max(1L, rewriteBytes / (64L << 20)).toInt
     IndexFiles.dropTombstoned(s, dir, man, rows, "doc_id")
